@@ -2,13 +2,23 @@
 table, the paper's own flow.
 
 Set-up joins generated orders to customers (sf 0.1, about 150k rows with
-string PII columns) and appends them to a merge-on-read lake table in
-seeded batches. The timed closed loop then sends one erasure request at a
-time through the SQL facade: ``DELETE … WHERE c_custkey = X`` followed by
-a check read of that subject. Every few requests a full read merges the
-outstanding deletes, and every few more a four-step purge runs
-(``rewrite_data_files`` → ``rewrite_position_delete_files`` →
-``expire_snapshots`` → ``remove_orphan_files``).
+string PII columns) and appends them to a merge-on-read lake table the
+way such a table fills: in order-date order, in eight seeded append
+commits, with customers arriving over time, so that each commit holds a
+window of dates and its own newest customers and its column bounds name
+particular subjects. The timed closed loop then sends one erasure request
+at a time, for a seeded uniform draw of the subjects, through the SQL
+facade: ``DELETE … WHERE c_custkey = X`` followed by a check read of that
+subject. The loop runs whole rounds until the run's time is up: a round
+is three requests, then a full read that merges their deletes, then a
+four-step purge (``rewrite_data_files`` →
+``rewrite_position_delete_files`` → ``expire_snapshots`` →
+``remove_orphan_files``).
+
+After the window one more request erases a subject that a metadata file
+names in a column bound, the case an erasure audit must cover, and a
+final purge follows. ``residual_pii_files`` then counts the files under
+the table root that still hold any erased subject.
 """
 
 from __future__ import annotations
@@ -27,12 +37,13 @@ from spans import median, tail
 
 PARAMS = {
     "sf": 0.1,
-    "append_batches": 2,
+    "append_commits": 8,
     "setup_repeats": 3,
-    "mor_read_every": 3,
-    "purge_every": 6,
-    "min_rounds": 2,
+    "round_requests": 3,
 }
+
+# prefixes of the per-layer metrics this workload reports
+LAYERS = ("lake.",)
 
 TABLE = "default.pii"
 QUALIFIED = "demo.default.pii"
@@ -47,7 +58,11 @@ _DDL = (
 
 def pii_rows(seed: int, sf: float) -> pa.Table:
     """Orders joined to their customer, with generated email and phone
-    columns, in a seeded row order."""
+    columns, in order-date order.
+
+    Customers arrive over time: the order at the r-th of n order dates
+    belongs to a customer drawn from the first (r + 1) / n of the key
+    range, those who had arrived by then."""
     tabs = gen.build_tables(seed, sf)
     cust = tabs["customer"]
     rng = np.random.default_rng(seed + 1)
@@ -60,16 +75,23 @@ def pii_rows(seed: int, sf: float) -> pa.Table:
              for c, d in zip(cust["c_nationkey"].to_pylist(), digits.tolist())]
     cust = cust.append_column("c_email", pa.array(email, pa.string()))
     cust = cust.append_column("c_phone", pa.array(phone, pa.string()))
-    joined = tabs["orders"].join(cust, "o_custkey", "c_custkey", join_type="inner")
+    by_date = [("o_orderdate", "ascending"), ("o_orderkey", "ascending")]
+    orders = tabs["orders"].sort_by(by_date)
+    m = orders.num_rows
+    arrived = np.maximum((np.arange(1, m + 1) * n) // m, 1)
+    custkey = pa.array((rng.random(m) * arrived).astype(np.int64))
+    orders = orders.set_column(orders.schema.get_field_index("o_custkey"), "o_custkey", custkey)
+    joined = orders.join(cust, "o_custkey", "c_custkey", join_type="inner").sort_by(by_date)
     joined = joined.append_column("c_custkey", joined["o_custkey"])
-    cols = [c.split()[0] for c in _DDL.split(", ")]
-    out = joined.select(cols)
-    return out.take(pa.array(rng.permutation(out.num_rows)))
+    return joined.select([c.split()[0] for c in _DDL.split(", ")])
 
 
 def _batches(rows: pa.Table, n: int, rng: np.random.Generator) -> list[pa.Table]:
-    cuts = np.sort(rng.choice(np.arange(1, rows.num_rows), n - 1, replace=False))
-    bounds = [0, *cuts.tolist(), rows.num_rows]
+    """``n`` consecutive slices of about equal size, each cut point moved
+    by a seeded quarter of a slice at most."""
+    size = rows.num_rows / n
+    cuts = np.round((np.arange(1, n) + rng.uniform(-0.25, 0.25, n - 1)) * size)
+    bounds = [0, *cuts.astype(int).tolist(), rows.num_rows]
     return [rows.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
 
 
@@ -79,7 +101,7 @@ def _build(run, warehouse: str):
 
     t0 = time.perf_counter()
     rows = pii_rows(run.seed, PARAMS["sf"])
-    batches = _batches(rows, PARAMS["append_batches"], np.random.default_rng(run.seed + 2))
+    batches = _batches(rows, PARAMS["append_commits"], np.random.default_rng(run.seed + 2))
     shutil.rmtree(warehouse, ignore_errors=True)
     engine = LakeEngine(run.spark, warehouse)
     engine.catalog.create_namespace("default")
@@ -114,12 +136,13 @@ def run_workload(run) -> None:
 
     rng = np.random.default_rng(run.seed + 3)
     subjects = np.unique(rows["c_custkey"].to_numpy())
-    order = rng.permutation(subjects).tolist()
+    draws = iter(rng.permutation(subjects).tolist())
     erased: list[int] = []
     samples = {"erase": [], "mor_read": [], "purge": []}
 
-    def request(timed: bool) -> None:
-        key = order[len(erased)]
+    def request(timed: bool, key: int | None = None) -> None:
+        if key is None:
+            key = next(k for k in draws if k not in erased)
         erased.append(key)
         run.tracer.new_op()
         t = time.perf_counter()
@@ -174,12 +197,11 @@ def run_workload(run) -> None:
         _check_live_count(run, engine, rows, erased)
 
     def round_(timed: bool) -> None:
-        """One round: ``purge_every`` requests, a full read after every
-        ``mor_read_every`` of them, and a purge at the end."""
-        for i in range(p["purge_every"]):
+        """One round: ``round_requests`` requests, then a full read with
+        their deletes outstanding and a purge."""
+        for _ in range(p["round_requests"]):
             request(timed)
-            if (i + 1) % p["mor_read_every"] == 0:
-                mor_read(timed)
+        mor_read(timed)
         purge(timed)
 
     # warm-up: each path once, with its first JIT compilations, untimed
@@ -188,26 +210,34 @@ def run_workload(run) -> None:
     purge(False)
 
     run.start_clock()
-    rounds = 0
-    while rounds < p["min_rounds"] or not run.expired():
+    while True:
         round_(True)
-        rounds += 1
+        if run.expired():
+            break
     run.stop_clock()
 
-    request(False)
+    # a subject that a metadata file names in a column bound
+    named = lakeprobe.bound_keys(location, "c_custkey") & set(subjects.tolist())
+    named = sorted(named - set(erased))
+    bound_subject = named[int(rng.integers(len(named)))]
+    request(False, bound_subject)
     pre_purge = _residual(location, rows, erased)
     run.check(
-        pre_purge[0] > 0,
-        "the residual scan found no trace of a subject erased merge-on-read "
-        "before its purge",
+        pre_purge["parquet"] > 0,
+        "before the purge the residual scan found none of the rows merge-on-read keeps",
+    )
+    run.check(
+        pre_purge["text"] > 0,
+        f"the residual scan found subject {bound_subject}, named in a column bound, "
+        "in no metadata file",
     )
     purge(False)
     live = rows.filter(pc.invert(_erased(rows, erased)))
     bytes_per_live = lakeprobe.table_bytes(location) / lakeprobe.parquet_bytes(live)
-    residual, scanned = _residual(location, rows, erased)
+    residual = _residual(location, rows, erased)
+    uniform = _residual(location, rows, [k for k in erased if k != bound_subject])
 
     run.ops = samples["erase"]
-    run.rate = len(samples["erase"]) / run.window_s
     run.diag.update(
         erase_p50_s=median(samples["erase"]),
         erase_tail_s=tail(samples["erase"])[0],
@@ -215,13 +245,15 @@ def run_workload(run) -> None:
         purge_s=median(samples["purge"]),
         append_rows_per_s=median(run.diag.pop("append_rows_per_s_reps")),
         bytes_per_live_byte=bytes_per_live,
-        residual_pii_files=residual,
-        residual_pii_files_before_purge=pre_purge[0],
-        files_scanned=scanned,
+        residual_pii_files=residual["parquet"] + residual["text"],
+        residual_pii_files_by_kind=residual,
+        residual_pii_files_uniform_subjects=uniform["parquet"] + uniform["text"],
+        residual_pii_files_before_purge=pre_purge,
+        bound_subject=bound_subject,
         erased_subjects=len(erased),
         samples={k: len(v) for k, v in samples.items()},
     )
-    run.layer["lake.audit.residual_pii_files"] = [float(residual)]
+    run.layer["lake.audit.residual_pii_files"] = [float(residual["parquet"] + residual["text"])]
     run.layer["lake.space.bytes_per_live_byte"] = [bytes_per_live]
 
 
@@ -230,13 +262,14 @@ def _erased(rows: pa.Table, erased: list[int]):
     return pc.is_in(rows["c_custkey"], value_set=pa.array(erased, pa.int64()))
 
 
-def _residual(location: str, rows: pa.Table, erased: list[int]) -> tuple[int, int]:
-    """Files under the table root holding any erased subject's key, name
-    or email, or the first 12 characters of that email (a prefix unique to
-    the subject, which truncated string bounds keep)."""
+def _residual(location: str, rows: pa.Table, erased: list[int]) -> dict[str, int]:
+    """Files under the table root holding any erased subject's key, name,
+    email or phone, or the first 12 characters of that email (a prefix
+    unique to the subject, which truncated string bounds keep)."""
     gone = rows.filter(_erased(rows, erased))
     emails = gone["c_email"].to_pylist()
-    needles = sorted(set(emails) | set(gone["c_name"].to_pylist()))
+    people = set(gone["c_name"].to_pylist()) | set(gone["c_phone"].to_pylist())
+    needles = sorted(set(emails) | people)
     fragments = sorted({m[:12] for m in emails})
     return lakeprobe.residual_pii_files(location, "c_custkey", set(erased), needles, fragments)
 

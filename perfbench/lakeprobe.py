@@ -5,15 +5,17 @@ the timed operation: it times a fresh metadata load, file pruning,
 delete-file scoping, the planner's estimate and a direct pruned scan, so
 a change in one of those layers shows under its own name.
 
-``residual_pii_files`` and ``table_bytes`` read every file under the
-table root with pyarrow or as text. They use no engine code, so they
-check the engine's claims rather than repeat them.
+``residual_pii_files``, ``bound_keys`` and ``table_bytes`` read the
+files under the table root with pyarrow or as text. They use no engine
+code, so they check the engine's claims rather than repeat them.
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -85,41 +87,94 @@ def residual_pii_files(
     keys: set[int],
     needles: list[str],
     fragments: list[str],
-) -> tuple[int, int]:
+) -> dict[str, int]:
     """Files under ``location`` that still hold an erased subject.
 
     Every parquet file is decoded: it counts when any row carries an
     erased ``key_column`` value or any string cell equals a needle. Every
     other file (metadata versions, manifests, hints, stats) is read as
-    text: it counts when any needle or fragment occurs in it. Fragments
-    are prefixes unique to one subject, which truncated string bounds in
-    manifests keep. Returns ``(files_with_residue, files_scanned)``."""
+    text: it counts when any needle or fragment occurs in it, when an
+    erased key follows ``key_column`` in a predicate (``c_custkey = 7``),
+    or when its JSON stores an erased key under ``key_column`` anywhere
+    but in a count map, as column bounds do. Fragments are prefixes
+    unique to one subject, which truncated string bounds in manifests
+    keep. Returns the counts ``parquet``, ``text`` (files with residue of
+    each kind) and ``scanned``."""
     key_arr = pa.array(sorted(keys), pa.int64())
     needle_arr = pa.array(needles, pa.string())
-    hits = scanned = 0
+    predicate_re = re.compile(
+        r"\b%s\s*=\s*(%s)\b" % (re.escape(key_column), "|".join(map(str, sorted(keys))))
+    )
+    out = {"parquet": 0, "text": 0, "scanned": 0}
     for root, _dirs, files in os.walk(location):
         for f in files:
             path = os.path.join(root, f)
-            scanned += 1
-            if _holds_pii(path, key_column, key_arr, needle_arr, needles + fragments):
-                hits += 1
-    return hits, scanned
+            out["scanned"] += 1
+            with open(path, "rb") as fh:
+                head = fh.read(4)
+            if head == b"PAR1":
+                out["parquet"] += _parquet_holds(path, key_column, key_arr, needle_arr)
+            else:
+                text = _read_text(path)
+                out["text"] += (
+                    any(n in text for n in needles + fragments)
+                    or predicate_re.search(text) is not None
+                    or not keys.isdisjoint(_json_values(text, key_column))
+                )
+    return out
 
 
-def _holds_pii(path, key_column, key_arr, needle_arr, substrings) -> bool:
+def _parquet_holds(path, key_column, key_arr, needle_arr) -> bool:
+    t = pq.read_table(path)
+    for name in t.column_names:
+        col = t[name]
+        if name == key_column and pa.types.is_integer(col.type):
+            if pc.any(pc.is_in(col, value_set=key_arr)).as_py():
+                return True
+        elif pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+            if pc.any(pc.is_in(col, value_set=needle_arr)).as_py():
+                return True
+    return False
+
+
+def _read_text(path: str) -> str:
     with open(path, "rb") as fh:
-        head = fh.read(4)
-    if head == b"PAR1":
-        t = pq.read_table(path)
-        for name in t.column_names:
-            col = t[name]
-            if name == key_column and pa.types.is_integer(col.type):
-                if pc.any(pc.is_in(col, value_set=key_arr)).as_py():
-                    return True
-            elif pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
-                if pc.any(pc.is_in(col, value_set=needle_arr)).as_py():
-                    return True
-        return False
-    with open(path, "rb") as fh:
-        text = fh.read().decode("utf-8", errors="replace")
-    return any(n in text for n in substrings)
+        return fh.read().decode("utf-8", errors="replace")
+
+
+def _json_values(text: str, key_column: str) -> set:
+    """Values stored under ``key_column`` in a JSON document or in JSON
+    lines, outside maps named ``…counts`` (``null_counts`` holds a count
+    under the column's name, not a value of it)."""
+    try:
+        docs = [json.loads(text)]
+    except ValueError:
+        docs = []
+        for line in text.splitlines():
+            try:
+                docs.append(json.loads(line))
+            except ValueError:
+                continue
+    out: set = set()
+    stack = [(d, False) for d in docs]
+    while stack:
+        node, in_counts = stack.pop()
+        if isinstance(node, dict):
+            for k, v in node.items():
+                if k == key_column and not in_counts and not isinstance(v, (dict, list)):
+                    out.add(v)
+                stack.append((v, in_counts or k.endswith("counts")))
+        elif isinstance(node, list):
+            stack.extend((v, in_counts) for v in node)
+    return out
+
+
+def bound_keys(location: str, key_column: str) -> set[int]:
+    """Every integer the metadata files under ``location`` store under
+    ``key_column`` outside count maps, as column bounds do."""
+    meta = os.path.join(location, "metadata")
+    out: set[int] = set()
+    for f in os.listdir(meta):
+        values = _json_values(_read_text(os.path.join(meta, f)), key_column)
+        out.update(v for v in values if isinstance(v, int) and not isinstance(v, bool))
+    return out

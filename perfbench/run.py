@@ -3,7 +3,7 @@
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload erasure_cycle --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload erasure_cycle --seed 1 --seconds 10 --trace 0
 
 Workloads: ``erasure_cycle`` (erasure.py) and ``query_suite``
 (suite.py). Each is one client in a closed
@@ -46,8 +46,10 @@ WORKLOADS = {
 BUILD_SPANS = {"lake.sql.delete", "lake.sql.plan", "suite.plan"}
 ACTION_SPANS = {"lake.sql.exec", "suite.exec"}
 
-# Count metrics of layers a workload does not reach read 0 there.
-COUNT_UNITS = {"count", "ratio", "bytes"}
+# Per-layer metrics every workload reports; the rest start with one of
+# the prefixes in its module's ``LAYERS``, and read 0 on a workload that
+# never reaches that layer.
+COMMON_LAYERS = ("op.", "spark.", "trace.")
 
 # The driver JVM's heap is fixed and touched up front, so peak RSS does
 # not swing with the garbage collector's heap-sizing decisions from run
@@ -80,7 +82,6 @@ class Run:
         self.diag: dict = {}
         self.setup_reps: list[float] = []
         self.ops: list[float] = []
-        self.rate = 0.0
         self.attempted = 0
         self.failed = 0
         self.failures: list[str] = []
@@ -153,7 +154,7 @@ def _metric_values(run: Run, trace: bool, session_s: float, rss_mb: float) -> di
         return {
             "setup_s": session_s + median(run.setup_reps),
             "op_p50_s": median(run.ops),
-            "ops_per_s": run.rate,
+            "ops_per_s": len(run.ops) / run.window_s,
             "peak_rss_mb": rss_mb,
         }
     t = run.tracer
@@ -168,7 +169,9 @@ def _metric_values(run: Run, trace: bool, session_s: float, rss_mb: float) -> di
         "trace.bookkeeping_s": t.bookkeeping_s,
     }
     for name in {s["name"] for s in t.spans} - {"op"}:
-        out[f"{name}_jobs"] = median([s["jobs"] for s in t.named(name)])
+        spans = t.named(name)
+        out[f"{name}_s"] = median([s["end"] - s["start"] for s in spans])
+        out[f"{name}_jobs"] = median([s["jobs"] for s in spans])
     for name, values in run.layer.items():
         out[name] = median(values)
     return out
@@ -300,10 +303,11 @@ def main(argv: list[str]) -> int:
     _remove_work(work)
 
     section = spec["per_layer"] if args.trace else spec["end_to_end"]
+    reached = COMMON_LAYERS + module.LAYERS if args.trace else ("",)
     metrics = {}
     for m in section:
         name, unit = m["name"], m["unit"]
-        if name not in values and unit not in COUNT_UNITS and not crashed:
+        if name not in values and name.startswith(reached) and not crashed:
             raise KeyError(f"workload {args.workload} produced no {name}")
         metrics[name] = {"value": float(values.get(name, 0.0)), "unit": unit}
     print(json.dumps(diag, default=str))
