@@ -54,6 +54,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import re
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,6 +99,31 @@ def _one_row_df(spark: SparkSession, data: dict[str, Any]) -> DataFrame:
     return _local_frame(spark, [tuple(data.values())], T.StructType(fields))
 
 
+def _dml_status(spark: SparkSession, table: str, status: str, snap) -> DataFrame:
+    """Status row of a DELETE / UPDATE / MERGE. A statement that matches
+    no row commits nothing and reports a NULL ``snapshot_id``, which row
+    inference cannot type — so the schema is declared."""
+    from demo_iceberg_permanent_delete_spark.lake.table import _local_frame
+
+    return _local_frame(
+        spark,
+        [(table, status, snap.snapshot_id if snap else None)],
+        "table string, status string, snapshot_id bigint",
+    )
+
+
+@dataclass
+class _CachedTable:
+    """A SELECT-path table handle, valid while the table's metadata
+    version and identity token are unchanged; ``read`` is the full read,
+    built only when a statement registers it."""
+
+    version: int
+    ident: Any
+    table: LakeTable
+    read: DataFrame | None = None
+
+
 def _store(cache: dict, key, val, cap: int) -> None:
     """Bounded insert with FIFO single-entry eviction (dicts preserve
     insertion order) — wholesale clear() would evict hot tables' entries
@@ -129,21 +155,21 @@ class LakeEngine:
         # (TableMetadata.latest_version), so any commit — from this
         # facade, a LakeTable handle, or another process — invalidates
         # naturally; mutating statement handlers never use the cache.
-        #   name → (metadata_version, identity, LakeTable, read() DataFrame)
-        self._table_cache: dict[str, tuple] = {}
+        # Scan DataFrames are not cached here: every commit would miss,
+        # and the file-read plans under them are memoized per session
+        # by the lake read layer (lake/read_plans.py).
+        self._table_cache: dict[str, _CachedTable] = {}
         #   (name, metadata_version, predicate) → scan_estimate dict
         self._estimate_cache: dict[tuple, dict] = {}
-        #   (name, metadata_version, predicate) → manifest-pruned scan df
-        self._scan_cache: dict[tuple, DataFrame] = {}
         #   (name, metadata_version, view) already registered this session
         #   — each metadata view pays a driver-side build (manifest walk,
         #   createDataFrame), and e.g. the file-summary analytics hits the
         #   same views in consecutive statements
         self._meta_view_reg: set[tuple] = set()
 
-    def _cached_table(self, name: str) -> tuple[LakeTable, DataFrame]:
-        """Version-checked cached (LakeTable, read DataFrame) for SELECT
-        paths. One registry read + one listdir + one stat when unchanged.
+    def _cached_entry(self, name: str) -> _CachedTable:
+        """Version-checked cache entry for SELECT paths. One registry
+        read + one listdir + one stat when unchanged.
 
         The version number alone is not table identity: DROP PURGE +
         CREATE of the same name reuses the deterministic location and
@@ -171,7 +197,6 @@ class LakeEngine:
         cache_key = name if wb is None else f"{name}@{wb}"
         cached = self._table_cache.get(cache_key)
         if entry is not None and cached is not None:
-            version, ident, t, df = cached
             try:
                 latest = TableMetadata.latest_version(entry["location"])
             except OSError:
@@ -182,32 +207,34 @@ class LakeEngine:
                 else None
             )
             if (
-                latest == version
-                and ident is not None  # None = unknowable → never matches
-                and cur_ident == ident
-                and t.metadata.location == entry["location"]
+                latest == cached.version
+                and cached.ident is not None  # None = unknowable → never matches
+                and cur_ident == cached.ident
+                and cached.table.metadata.location == entry["location"]
             ):
-                return t, df
+                return cached
         t = self.catalog.load_table(name)
-        df = self._branch_read(t)
         ident = doc_identity(t.metadata.location, t.metadata.version)
-        self._table_cache[cache_key] = (t.metadata.version, ident, t, df)
-        # drop the table's stale estimates/scans with it (a same-version
+        cached = _CachedTable(t.metadata.version, ident, t)
+        self._table_cache[cache_key] = cached
+        # drop the table's stale estimates with it (a same-version
         # recreate would otherwise serve the old table's)
         self._estimate_cache = {
             k: v for k, v in self._estimate_cache.items() if k[0] != name
         }
-        self._scan_cache = {
-            k: v for k, v in self._scan_cache.items() if k[0] != name
-        }
         self._meta_view_reg = {
             k for k in self._meta_view_reg if k[0] != name
         }
-        return t, df
+        return cached
 
-    def _cached_scan(
-        self, name: str, t: LakeTable, predicate: str, fallback: DataFrame
-    ):
+    def _cached_read(self, cached: _CachedTable) -> DataFrame:
+        """The session-branch full read of a cached table, built on first
+        use and kept with the entry."""
+        if cached.read is None:
+            cached.read = self._branch_read(cached.table)
+        return cached.read
+
+    def _pruned_scan(self, cached: _CachedTable, predicate: str) -> DataFrame:
         """Manifest-pruned read for a statement whose WHERE provably
         scopes this table's single scan (lake/scanscope.py): files whose
         min/max stats cannot match are never opened — Iceberg's scan
@@ -217,19 +244,11 @@ class LakeEngine:
         so a non-deterministic conjunct (rand()) is never drawn twice,
         and the only layer that must be sound is the conservative pruner
         (unevaluable leaves keep every file)."""
-        key = (name, t.metadata.version, predicate)
-        df = self._scan_cache.get(key)
-        if df is None:
-            try:
-                df = t.scan(predicate, prune_only=True)
-            except Exception:
-                # never cache a failure under the predicate key (a
-                # transient error must not pin the unpruned read for the
-                # version) — the caller's already-cached full read is the
-                # free safe answer
-                return fallback
-            _store(self._scan_cache, key, df, cap=64)
-        return df
+        try:
+            return cached.table.scan(predicate, prune_only=True)
+        except Exception:
+            # the unpruned read is always a correct answer
+            return self._cached_read(cached)
 
     def _cached_estimate(self, name: str, t: LakeTable, predicate):
         from demo_iceberg_permanent_delete_spark.lake.planner import (
@@ -972,14 +991,7 @@ class LakeEngine:
     def _delete(self, m: re.Match) -> DataFrame:
         t, branch, wap_id = self._dml_target(m.group("name"))
         snap = t.delete(m.group("pred"), branch=branch, wap_id=wap_id)
-        return _one_row_df(
-            self.spark,
-            {
-                "table": t.name,
-                "status": "deleted",
-                "snapshot_id": snap.snapshot_id if snap else None,
-            },
-        )
+        return _dml_status(self.spark, t.name, "deleted", snap)
 
     def _update(self, m: re.Match) -> DataFrame:
         from pyspark.sql import functions as F
@@ -990,14 +1002,7 @@ class LakeEngine:
             col, expr = part.split("=", 1)
             assignments[col.strip()] = F.expr(expr.strip())
         snap = t.update(assignments, m.group("pred"), branch=branch, wap_id=wap_id)
-        return _one_row_df(
-            self.spark,
-            {
-                "table": t.name,
-                "status": "updated",
-                "snapshot_id": snap.snapshot_id if snap else None,
-            },
-        )
+        return _dml_status(self.spark, t.name, "updated", snap)
 
     def _merge(self, m: re.Match) -> DataFrame:
         t, branch, wap_id = self._dml_target(m.group("name"))
@@ -1104,14 +1109,7 @@ class LakeEngine:
             wap_id=wap_id,
             schema_evolution=bool(m.group("evolve")),
         )
-        return _one_row_df(
-            self.spark,
-            {
-                "table": t.name,
-                "status": "merged",
-                "snapshot_id": snap.snapshot_id if snap else None,
-            },
-        )
+        return _dml_status(self.spark, t.name, "merged", snap)
 
     # ------------------------------------------------------ CALL handlers
     def _call(self, m: re.Match) -> DataFrame:
@@ -1648,7 +1646,7 @@ class LakeEngine:
             # main manifest — defer to the general (branch-routed) path
             return None
         try:
-            t, _ = self._cached_table(self._strip_catalog(ident))
+            t = self._cached_entry(self._strip_catalog(ident)).table
         except Exception:
             return None
         parsed: list[tuple[str, str, str | None]] = []
@@ -1829,16 +1827,14 @@ class LakeEngine:
             extract_scan_predicates,
         )
 
-        loaded: dict[str, tuple[LakeTable, DataFrame]] = {
-            name: self._cached_table(name) for name in needed
-        }
+        loaded = {name: self._cached_entry(name) for name in needed}
         rewritten = "".join(segments)
         try:
             predicates = extract_scan_predicates(
                 rewritten,
                 {
-                    name.replace(".", "__"): set(df.columns)
-                    for name, (_, df) in loaded.items()
+                    name.replace(".", "__"): set(cached.table.schema().names)
+                    for name, cached in loaded.items()
                 },
                 occurrences,
             )
@@ -1850,13 +1846,18 @@ class LakeEngine:
         # keep the branch read as-is (correct first, fast later)
         on_branch = self._active_read_branch() is not None
         for name, views in needed.items():
-            t, df = loaded[name]
+            cached = loaded[name]
+            t = cached.table
             pred = None if on_branch else predicates.get(name.replace(".", "__"))
             est = self._cached_estimate(name, t, pred) if not on_branch else None
-            if pred is not None:
-                # register the manifest-pruned scan, not the full read —
-                # Spark re-applies the statement's WHERE above the view
-                df = self._cached_scan(name, t, pred, fallback=df)
+            # register the manifest-pruned scan when the WHERE scopes it —
+            # Spark re-applies the statement's WHERE above the view — and
+            # build the full read only when it is the registered frame
+            df = (
+                self._cached_read(cached)
+                if pred is None
+                else self._pruned_scan(cached, pred)
+            )
             if est is not None and 0 < est["bytes"] <= _broadcast_threshold(
                 self.spark, None
             ):
